@@ -1,24 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Let AQE re-plan (coalesce/skew-split) the plans that feed persisted
-      // frames too: iterative operators (connected components) cache tiny
-      // intermediate tables whose shuffles would otherwise run at the full
-      // static partition count every round.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Warm up codegen/JIT + parquet footers so the first timed query isn't
     // charged Spark's session start-up cost.
@@ -28,16 +13,30 @@ object Bench {
     // query's timing (unset in driver runs → full sweep).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+    val selected = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    sweep(spark, sfDir, selected,
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full_latest.json"))
+    SparkEntry.releaseCaches()
+    spark.stop()
+  }
+
+  /** Times `selected` in name order and prints the result lines, ending
+    * with `total_compact`. A key that throws is listed under `"failed"` on
+    * the `total` and `total_compact` lines and is left out of the total,
+    * the per-query maps and the sidecar file `out`: it never gets a time. */
+  private[graft] def sweep(spark: SparkSession, sfDir: String,
+                           selected: Seq[(String, (SparkSession, String) => DataFrame)],
+                           out: String): Unit = {
     // ML-training queries carry large fit variance (thread scheduling in
     // parallel CV fits measured 3.7-10.2s for the same query on one
-    // host): report the MEDIAN of three cold repetitions, clearing only
-    // the ML-fit memos between samples so each one pays the real fit.
-    // The final repetition leaves the memo populated, preserving the
-    // warm path of the queries that share the fit (q28/q62/q63).
-    // Sample counts tuned to measured run-to-run spread: the two fits
-    // that still exceeded 1.15x between full runs at 3 samples take 5.
+    // host): report the MEDIAN of several cold repetitions. Between
+    // repetitions only what the previous repetition built is released
+    // ([[Artifact.repeated]]), so each sample pays its own fit while the
+    // artifacts other keys built stay warm for their sharers (q28/q62/q63)
+    // whatever the sort order. Sample counts tuned to measured run-to-run
+    // spread: the two fits that still exceeded 1.15x between full runs at
+    // 3 samples take 5.
     // q276_zorder is a 64-file layout REWRITE, not a query — its
     // wall-clock rides filesystem/page-cache state and has flapped
     // 5s ↔ 14s between identical runs, polluting round-over-round
@@ -47,60 +46,58 @@ object Bench {
       "q26_kmeans_recommend" -> 5, "q27_rf_predict" -> 5,
       "q34_model_compare" -> 5, "q120_tuned_gbt" -> 3,
       "q164_quality_classifier" -> 5, "q276_zorder" -> 3)
-    val results = selected.map { case (name, fn) =>
+    val outcomes = selected.sortBy(_._1).map { case (name, fn) =>
       def once(): Double = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
       }
-      val t = mlNoise.get(name) match {
-        case Some(reps) =>
-          val samples = (1 to reps)
-            .map { _ => SparkEntry.releaseMlCaches(); once() }.sorted
-          samples(reps / 2)
-        case None => once()
-      }
-      name -> t
-    }.toMap
+      name -> (try {
+        val samples = Artifact.repeated(mlNoise.getOrElse(name, 1))(_ => once()).sorted
+        Some(samples(samples.size / 2))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+      })
+    }
+    val results = outcomes.collect { case (k, Some(t)) => k -> t }
+    val failed = outcomes.collect { case (k, None) => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
+    val total = results.map(_._2).sum
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"}""")
     // The full per-query map ALSO lands as a sidecar file: harvesters
     // that tail-capture stdout truncate the map above to their window
     // (~56 of 300+ queries), which starves round-over-round comparison.
     // One sorted entry per line so git diffs show per-query deltas.
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full_latest.json")
     try {
-      val body = results.toSeq.sortBy(_._1)
+      val body = results
         .map { case (k, v) => f"""  "$k": $v%.3f""" }
         .mkString(
           f"""{%n  "_sf": "$sfDir",%n  "_total_sec": $total%.3f,%n  "_n_queries": ${results.size},%n""",
           ",\n", "\n}\n")
       java.nio.file.Files.write(java.nio.file.Paths.get(out),
         body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () } // stdout line above remains the contract
-    // Compact totals-only record, under a DISTINCT metric name so a
-    // harvester that sums or filters by metric can never double-count the
-    // sweep total: harvesters that tail-capture output always see a
-    // complete parseable line even when the per-query map above outgrows
-    // their capture window.
-    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${results.size},"sf":"$sfDir"}""")
-    // Per-query map re-emitted LAST as BOUNDED chunks (≤50 entries per
-    // line, integer milliseconds): the 462-entry map on one line is ~14 KB
-    // and outgrows tail-capture windows, which starved the round-15
-    // per-query comparison (PERF_r15 n_common=0). Each chunk is a complete
-    // parseable JSON line, so a bounded tail always contains whole chunks.
-    // Values here are rounded copies of the map above — the first line and
-    // the sidecar file remain the full-precision record.
-    val chunks = results.toSeq.sortBy(_._1).grouped(50).toSeq
+    } catch { case _: Throwable => () } // stdout lines remain the contract
+    // Per-query map re-emitted as BOUNDED chunks (≤50 entries per line,
+    // integer milliseconds): the 462-entry map on one line is ~14 KB and
+    // outgrows tail-capture windows, which starved the round-15 per-query
+    // comparison (PERF_r15 n_common=0). Each chunk is a complete parseable
+    // JSON line, so a bounded tail always contains whole chunks. Values
+    // here are rounded copies of the map above — the first line and the
+    // sidecar file remain the full-precision record.
+    val chunks = results.grouped(50).toSeq
     chunks.zipWithIndex.foreach { case (chunk, i) =>
       val body = chunk
         .map { case (k, v) => s"\"" + k + "\":" + math.round(v * 1000) }
         .mkString("{", ",", "}")
       println(s"""{"metric":"queries_${i + 1}of${chunks.size}","unit":"ms","queries":$body}""")
     }
-    SparkEntry.releaseCaches()
-    spark.stop()
+    // Compact totals-only record LAST, under a DISTINCT metric name so a
+    // harvester that sums or filters by metric can never double-count the
+    // sweep total: a harvester that tail-captures output always sees it
+    // as the final complete line, however long the lines above grow.
+    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failed,"sf":"$sfDir"}""")
   }
 }

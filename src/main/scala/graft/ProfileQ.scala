@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Dev-only measurement harness (guide §1): run named queries with a
@@ -21,13 +20,7 @@ object ProfileQ {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = args.lastOption.flatMap(_.toIntOption).getOrElse(1)
     val names = args.filterNot(_.forall(_.isDigit))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     catch { case _: Throwable => () }
@@ -50,9 +43,10 @@ object ProfileQ {
 
     for (name <- names) {
       val fn = SparkEntry.queries(name)
-      val times = (1 to reps).map { r =>
+      // Each repetition pays for the artifacts it builds: the helper
+      // releases what the previous repetition built, and nothing else.
+      val times = Artifact.repeated(reps) { r =>
         stages.clear(); jobs = 0
-        SparkEntry.releaseMlCaches()
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9

@@ -71,77 +71,62 @@ object SparkEntry
     Tables.events(s, d).withColumn("ts_us", expr("ts div 1000"))
 
   /** Pair shingle-intersection stats shared by the exact near-dup family —
-    * q20 (Jaccard), q46 (clusters), q53 (containment) — memoized per
-    * (session, scale dir): one shingle self-join serves all three (the
-    * stats table is the natural pipeline handoff, tiny vs the corpus).
-    * pairShingleStats materializes its output via localCheckpoint, so the
-    * memo holds a computed artifact, not a pinned cache; [[releaseCaches]]
-    * (or GC after the session drops) frees the blocks. Keying by session
-    * keeps a restarted session from receiving plans bound to a stopped one. */
-  private[graft] val pairStatsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def pairStats(s: SparkSession, d: String): DataFrame =
-    pairStatsCache.getOrElseUpdate((s, d),
-      Dedup.pairShingleStats(Tables.documents(s, d), "doc_id", "text", 3))
+    * q20 (Jaccard), q46 (clusters), q53 (containment): one shingle
+    * self-join serves all three (the stats table is the natural pipeline
+    * handoff, tiny vs the corpus). pairShingleStats materializes its output
+    * via localCheckpoint, so the artifact is a computed table, not a pinned
+    * cache; [[releaseCaches]] (or GC after the session drops) frees the
+    * blocks. */
+  private[graft] val pairStats = Artifact("pairStats") { (s, d) =>
+    Dedup.pairShingleStats(Tables.documents(s, d), "doc_id", "text", 3)
+  }
   private[graft] def jaccardPairs(s: SparkSession, d: String): DataFrame =
     Dedup.jaccardFromStats(pairStats(s, d), minJaccard = 0.2)
 
   /** Portable-LSH pair set shared by q82 (the pairs themselves), q118
     * (banding quality) and q194 (the source matrix): the md5 signature
-    * build + band join runs once per (session, dir) — the operator
-    * already returns an eager artifact, so the memo hands out computed
-    * rows, not a plan to replay. */
-  private[graft] val portablePairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def portableMinhashPairs(s: SparkSession, d: String): DataFrame =
-    portablePairsCache.getOrElseUpdate((s, d),
-      Dedup.minhashPairsPortable(Tables.documents(s, d), "doc_id", "text",
-        n = 3, bands = 8, rowsPerBand = 2, minAgree = 0.5))
+    * build + band join runs once — the operator already returns an eager
+    * artifact, so sharers get computed rows, not a plan to replay. */
+  private[graft] val portableMinhashPairs = Artifact("portableMinhashPairs") { (s, d) =>
+    Dedup.minhashPairsPortable(Tables.documents(s, d), "doc_id", "text",
+      n = 3, bands = 8, rowsPerBand = 2, minAgree = 0.5)
+  }
 
   /** Cluster labels shared by q46 (the raw clusters) and q100 (the
     * quality-canonical pick): connected() is an iterative job — one run
-    * per sweep, memoized as the materialized artifact it returns. */
-  private[graft] val clustersCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def clusterLabels(s: SparkSession, d: String): DataFrame =
-    clustersCache.getOrElseUpdate((s, d),
-      Components.connected(jaccardPairs(s, d), "id1", "id2")
-        .select(col("id").as("doc_id"), col("cluster")))
+    * per sweep, kept as the materialized artifact it returns. */
+  private[graft] val clusterLabels = Artifact("clusterLabels") { (s, d) =>
+    Components.connected(jaccardPairs(s, d), "id1", "id2")
+      .select(col("id").as("doc_id"), col("cluster"))
+  }
 
   /** BPE merge table shared by q145 (the learned merges) and q146 (the
-    * encode readout), memoized per (session, dir): the learning rounds'
-    * outputs are one-row materialized artifacts, so the memo holds a
-    * computed result, never a pinned corpus cache. */
-  private[graft] val bpeMergeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def bpeMergeTable(s: SparkSession, d: String): DataFrame =
-    bpeMergeCache.getOrElseUpdate((s, d),
-      Vocab.bpeMerges(Tables.documents(s, d), "text", merges = 4))
+    * encode readout): the learning rounds' outputs are one-row
+    * materialized artifacts, never a pinned corpus cache. */
+  private[graft] val bpeMergeTable = Artifact("bpeMergeTable") { (s, d) =>
+    Vocab.bpeMerges(Tables.documents(s, d), "text", merges = 4)
+  }
 
-  /** Bucketed fp store backing q81, built once per (session, scale dir):
-    * distinct fingerprints of the corpus third with doc_id % 3 == 0,
-    * written `bucketBy(shuffle-partitions, fp)` so the incremental
-    * anti-join's store side scans its buckets without an Exchange — the
-    * exact layout [[graft.streaming.IncrementalIngest]] maintains
-    * continuously, here as a deterministic batch artifact the DuckDB
-    * oracle can replay. Returns the catalog table name. */
-  private[graft] val fpStoreCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private[graft] def fpStoreTable(s: SparkSession, d: String): String =
-    fpStoreCache.getOrElseUpdate((s, d), {
-      val tbl = "graft_q81_store_" + (d.hashCode.toLong & 0xffffffffL).toString
-      val buckets = s.sessionState.conf.numShufflePartitions
-      // A previous JVM's warehouse dir would make the CREATE path of
-      // saveAsTable fail (fresh in-memory catalog + surviving location).
-      operators.Etl.resetManagedTable(s, tbl)
-      Tables.documents(s, d)
-        .filter(pmod(col("doc_id"), lit(3)) === 0)
-        .select(graft.functions.TextFunctions.fingerprint(col("text")).as("fp"))
-        .distinct()
-        .write.mode("overwrite").bucketBy(buckets, "fp").sortBy("fp")
-        .saveAsTable(tbl)
-      tbl
-    })
+  /** Bucketed fp store backing q81: distinct fingerprints of the corpus
+    * third with doc_id % 3 == 0, written `bucketBy(shuffle-partitions, fp)`
+    * so the incremental anti-join's store side scans its buckets without
+    * an Exchange — the exact layout [[graft.streaming.IncrementalIngest]]
+    * maintains continuously, here as a deterministic batch artifact the
+    * DuckDB oracle can replay. Returns the catalog table name. */
+  private[graft] val fpStoreTable = Artifact("fpStoreTable") { (s, d) =>
+    val tbl = "graft_q81_store_" + (d.hashCode.toLong & 0xffffffffL).toString
+    val buckets = s.sessionState.conf.numShufflePartitions
+    // A previous JVM's warehouse dir would make the CREATE path of
+    // saveAsTable fail (fresh in-memory catalog + surviving location).
+    operators.Etl.resetManagedTable(s, tbl)
+    Tables.documents(s, d)
+      .filter(pmod(col("doc_id"), lit(3)) === 0)
+      .select(graft.functions.TextFunctions.fingerprint(col("text")).as("fp"))
+      .distinct()
+      .write.mode("overwrite").bucketBy(buckets, "fp").sortBy("fp")
+      .saveAsTable(tbl)
+    tbl
+  }
 
   /** Bucketed LSH signature store backing q147 — the q81 layout for the
     * NEAR-dup family: the ingested third's (id, band, bk) band table
@@ -149,208 +134,151 @@ object SparkEntry
     * (id, sig) signature table bucketed on id (the verify join's key),
     * both from the portable md5 signature stage so the DuckDB oracle
     * replays the whole incremental path. */
-  private[graft] val lshStoreCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
-  private[graft] def lshStoreTables(s: SparkSession, d: String): (String, String) =
-    lshStoreCache.getOrElseUpdate((s, d), {
-      val suffix = (d.hashCode.toLong & 0xffffffffL).toString
-      val bandTbl = "graft_q147_bands_" + suffix
-      val sigTbl = "graft_q147_sigs_" + suffix
-      val buckets = s.sessionState.conf.numShufflePartitions
-      operators.Etl.resetManagedTable(s, bandTbl)
-      operators.Etl.resetManagedTable(s, sigTbl)
-      val (banded, sig) = Dedup.minhashStoreTables(
-        Tables.documents(s, d).filter(pmod(col("doc_id"), lit(3)) === 0),
-        "doc_id", "text", n = 3, bands = 8, rowsPerBand = 2)
-      banded.write.mode("overwrite")
-        .bucketBy(buckets, "band", "bk").saveAsTable(bandTbl)
-      sig.write.mode("overwrite")
-        .bucketBy(buckets, "id").saveAsTable(sigTbl)
-      (bandTbl, sigTbl)
-    })
+  private[graft] val lshStoreTables = Artifact("lshStoreTables") { (s, d) =>
+    val suffix = (d.hashCode.toLong & 0xffffffffL).toString
+    val bandTbl = "graft_q147_bands_" + suffix
+    val sigTbl = "graft_q147_sigs_" + suffix
+    val buckets = s.sessionState.conf.numShufflePartitions
+    operators.Etl.resetManagedTable(s, bandTbl)
+    operators.Etl.resetManagedTable(s, sigTbl)
+    val (banded, sig) = Dedup.minhashStoreTables(
+      Tables.documents(s, d).filter(pmod(col("doc_id"), lit(3)) === 0),
+      "doc_id", "text", n = 3, bands = 8, rowsPerBand = 2)
+    banded.write.mode("overwrite")
+      .bucketBy(buckets, "band", "bk").saveAsTable(bandTbl)
+    sig.write.mode("overwrite")
+      .bucketBy(buckets, "id").saveAsTable(sigTbl)
+    (bandTbl, sigTbl)
+  }
 
   /** Bucketed sign-cell store backing q154 — the q147 layout for the
     * SEMANTIC family: the ingested third's (bk, id, v, nrm) cell table
     * bucketed on bk (the probe join's key), built by the same
     * [[Dedup.semanticStoreTable]] stage [[graft.streaming.SemanticIngest]]
     * maintains continuously. Returns the catalog table name. */
-  private[graft] val semStoreCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private[graft] def semanticStoreTable(s: SparkSession, d: String): String =
-    semStoreCache.getOrElseUpdate((s, d), {
-      val tbl = "graft_q154_cells_" + (d.hashCode.toLong & 0xffffffffL).toString
-      val buckets = s.sessionState.conf.numShufflePartitions
-      operators.Etl.resetManagedTable(s, tbl)
-      Dedup.semanticStoreTable(
-        Tables.embeddings(s, d).filter(pmod(col("vec_id"), lit(3)) === 0),
-        "vec_id", "embedding", signBits = 4)
-        .write.mode("overwrite").bucketBy(buckets, "bk").saveAsTable(tbl)
-      tbl
-    })
+  private[graft] val semanticStoreTable = Artifact("semanticStoreTable") { (s, d) =>
+    val tbl = "graft_q154_cells_" + (d.hashCode.toLong & 0xffffffffL).toString
+    val buckets = s.sessionState.conf.numShufflePartitions
+    operators.Etl.resetManagedTable(s, tbl)
+    Dedup.semanticStoreTable(
+      Tables.embeddings(s, d).filter(pmod(col("vec_id"), lit(3)) === 0),
+      "vec_id", "embedding", signBits = 4)
+      .write.mode("overwrite").bucketBy(buckets, "bk").saveAsTable(tbl)
+    tbl
+  }
 
-  /** Parquet store + bloom sidecar for q97, memoized per (session, dir):
-    * documents written as 16 files NOT organized by doc_id (the sidecar's
-    * whole point — equality skipping on a column with no layout help),
-    * then one distributed pass builds a per-file bloom. The sidecar is
-    * O(nFiles); the probe reads the sidecar, then only candidate files.
-    * BloomIndexSpec holds the ≤3-of-16 pruning + no-false-negative bars;
-    * this store makes the end-to-end lookup an oracle-checked row. */
-  private[graft] val bloomStoreCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
-  private[graft] def bloomStorePaths(s: SparkSession, d: String): (String, String) =
-    bloomStoreCache.getOrElseUpdate((s, d), {
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_q97_" + (d.hashCode.toLong & 0xffffffffL)).getAbsolutePath
-      val store = s"$base/store"; val side = s"$base/sidecar"
-      Tables.documents(s, d).select("doc_id", "source", "n_chars")
-        .repartition(16).write.mode("overwrite").parquet(store)
-      // Sized to the store's actual per-file rows: the aggregator
-      // allocates a zero-bloom per (file × input partition), so an
-      // oversized `expectedPerFile` multiplies build allocations for no
-      // fpp gain. Real deployments size this to rows-per-file.
-      sources.BloomIndex.build(s, store, side, "doc_id",
-        expectedPerFile = 20000L)
-      (store, side)
-    })
+  /** Parquet store + bloom sidecar for q97: documents written as 16 files
+    * NOT organized by doc_id (the sidecar's whole point — equality
+    * skipping on a column with no layout help), then one distributed pass
+    * builds a per-file bloom. The sidecar is O(nFiles); the probe reads the
+    * sidecar, then only candidate files. BloomIndexSpec holds the ≤3-of-16
+    * pruning + no-false-negative bars; this store makes the end-to-end
+    * lookup an oracle-checked row. */
+  private[graft] val bloomStorePaths = Artifact("bloomStorePaths") { (s, d) =>
+    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft_q97_" + (d.hashCode.toLong & 0xffffffffL)).getAbsolutePath
+    val store = s"$base/store"; val side = s"$base/sidecar"
+    Tables.documents(s, d).select("doc_id", "source", "n_chars")
+      .repartition(16).write.mode("overwrite").parquet(store)
+    // Sized to the store's actual per-file rows: the aggregator
+    // allocates a zero-bloom per (file × input partition), so an
+    // oversized `expectedPerFile` multiplies build allocations for no
+    // fpp gain. Real deployments size this to rows-per-file.
+    sources.BloomIndex.build(s, store, side, "doc_id",
+      expectedPerFile = 20000L)
+    (store, side)
+  }
 
-  /** Text store + TERM bloom sidecar for q270, memoized like the q97
-    * store: 16 files not organized by content, one term-bloom per file.
-    * TermIndexSpec holds the locality-pruning and no-false-negative
-    * bars; this store makes the end-to-end search an oracle-checked
-    * row set. */
-  private[graft] val termStoreCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
-  private[graft] def termStorePaths(s: SparkSession, d: String): (String, String) =
-    termStoreCache.getOrElseUpdate((s, d), {
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_q270_" + (d.hashCode.toLong & 0xffffffffL)).getAbsolutePath
-      val store = s"$base/store"; val side = s"$base/sidecar"
-      Tables.documents(s, d).select("doc_id", "source", "text")
-        .repartition(16).write.mode("overwrite").parquet(store)
-      sources.TermIndex.build(s, store, side, "text",
-        expectedPerFile = 20000L)
-      (store, side)
-    })
+  /** Text store + TERM bloom sidecar for q270, built like the q97 store:
+    * 16 files not organized by content, one term-bloom per file.
+    * TermIndexSpec holds the locality-pruning and no-false-negative bars;
+    * this store makes the end-to-end search an oracle-checked row set. */
+  private[graft] val termStorePaths = Artifact("termStorePaths") { (s, d) =>
+    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft_q270_" + (d.hashCode.toLong & 0xffffffffL)).getAbsolutePath
+    val store = s"$base/store"; val side = s"$base/sidecar"
+    Tables.documents(s, d).select("doc_id", "source", "text")
+      .repartition(16).write.mode("overwrite").parquet(store)
+    sources.TermIndex.build(s, store, side, "text",
+      expectedPerFile = 20000L)
+    (store, side)
+  }
 
-  /** Range-clustered store + zone-map sidecar for q124, memoized per
-    * (session, dir) like the bloom store: the layout is what makes the
-    * min/max intervals disjoint enough to prune. */
-  private[graft] val zoneStoreCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
-  private[graft] def zoneStorePaths(s: SparkSession, d: String): (String, String) =
-    zoneStoreCache.getOrElseUpdate((s, d), {
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_q124_" + (d.hashCode.toLong & 0xffffffffL)).getAbsolutePath
-      val store = s"$base/store"; val side = s"$base/sidecar"
-      Etl.writeRangeLayout(Tables.documents(s, d)
-        .select("doc_id", "source", "n_chars"),
-        store, nFiles = 16, rangeCol = "n_chars", "doc_id")
-      sources.ZoneMapIndex.build(s, store, side, Seq("n_chars"))
-      (store, side)
-    })
-
-  /** Drop every memoized substrate (pair stats, RF fits) so their blocks
-    * and models become collectable — drivers call this once their query
-    * sweep is done. */
-  /** Drop only the ML-FIT memos (RF family, the q26 clustering) — the
-    * bench's median-of-3 repeats call this between repetitions so every
-    * sample pays the real fit instead of a memo hit, while the shared
-    * non-ML substrates (pair stats, LSH stores, IVF/PQ indexes) keep
-    * their build-once contract. The last repetition repopulates the
-    * memos, so downstream sharers (q28/q62/q63) keep their warm path. */
-  def releaseMlCaches(): Unit = {
-    rfCache.clear()
-    clusterCache.clear()
+  /** Range-clustered store + zone-map sidecar for q124, built like the
+    * bloom store: the layout is what makes the min/max intervals disjoint
+    * enough to prune. */
+  private[graft] val zoneStorePaths = Artifact("zoneStorePaths") { (s, d) =>
+    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft_q124_" + (d.hashCode.toLong & 0xffffffffL)).getAbsolutePath
+    val store = s"$base/store"; val side = s"$base/sidecar"
+    Etl.writeRangeLayout(Tables.documents(s, d)
+      .select("doc_id", "source", "n_chars"),
+      store, nFiles = 16, rangeCol = "n_chars", "doc_id")
+    sources.ZoneMapIndex.build(s, store, side, Seq("n_chars"))
+    (store, side)
   }
 
   /** Duplicated-span table at the k=8 contract point, shared by q325
     * (the raw spans), q326 (per-doc rollup), q342 (per-source decision
     * table) and q350 (the rewrite): the detection pass — tokenize, gram
-    * explode, two-phase df count, island merge — runs ONCE per
-    * (session, dir) and hands out a localCheckpoint'd artifact (span
-    * rows are corpus-duplication-sized, tiny next to the corpus). */
-  private[graft] val spanCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def dupSpans8(s: SparkSession, d: String): DataFrame =
-    spanCache.getOrElseUpdate((s, d), operators.Materialize.transient(
-      Dedup.dupSpans(Tables.documents(s, d), "doc_id", "text", k = 8)))
-
-  def releaseCaches(): Unit = {
-    spanCache.clear()
-    bloomStoreCache.clear()
-    zoneStoreCache.clear()
-    termStoreCache.clear()
-    clustersCache.clear()
-    fpStoreCache.clear()
-    lshStoreCache.clear()
-    bpeMergeCache.clear()
-    pairStatsCache.clear()
-    portablePairsCache.clear()
-    rfCache.clear()
-    clusterCache.clear()
-    ivfCache.values.foreach(_.release())
-    ivfCache.clear()
-    pqCache.values.foreach(_.release())
-    pqCache.clear()
-    ivfPqCache.values.foreach(_.release())
-    ivfPqCache.clear()
+    * explode, two-phase df count, island merge — runs ONCE and hands out a
+    * localCheckpoint'd artifact (span rows are corpus-duplication-sized,
+    * tiny next to the corpus). */
+  private[graft] val dupSpans8 = Artifact("dupSpans8") { (s, d) =>
+    operators.Materialize.transient(
+      Dedup.dupSpans(Tables.documents(s, d), "doc_id", "text", k = 8))
   }
 
-  /** Clustered parts shared by q26/q62/q63, memoized per (session, dir):
-    * ONE KMeans fit serves the single-item, multi-item and composed
-    * recommendation queries. localCheckpoint materializes the (tiny —
-    * one row per item) clustered table eagerly, so the three consumers
-    * share one FIT and one MATERIALIZATION — without it the memo hands out
-    * a plan and every consumer's first action replays the prep+transform
-    * chain. */
-  private[graft] val clusterCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def clusteredParts(s: SparkSession, d: String): DataFrame =
-    clusterCache.getOrElseUpdate((s, d),
-      ml.Recommend.clusterItems(Tables.part(s, d),
-        "p_partkey", "p_brand", Seq("p_retailprice", "p_size"))
-        .localCheckpoint(true))
+  /** Releases every shared artifact (pair stats, stores, fits, indexes) so
+    * their blocks and models become collectable — drivers call this once
+    * their query sweep is done, and between scale dirs when one session
+    * serves several. */
+  def releaseCaches(): Unit = Artifact.releaseAll()
 
-  /** One IVF index shared by q32 (recall-probe) and q61 (exact-probe),
-    * memoized per (session, dir): the KMeans cell fit runs once per sweep.
-    * The index pins its feature-projection cache while live —
-    * [[releaseCaches]] calls release() on every entry. */
-  private[graft] val ivfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Similarity.IvfIndex]
-  private[graft] def ivfIdx(s: SparkSession, d: String): Similarity.IvfIndex =
-    ivfCache.getOrElseUpdate((s, d),
+  /** Clustered parts shared by q26/q62/q63: ONE KMeans fit serves the
+    * single-item, multi-item and composed recommendation queries.
+    * localCheckpoint materializes the (tiny — one row per item) clustered
+    * table eagerly, so the three consumers share one FIT and one
+    * MATERIALIZATION — without it every consumer's first action replays
+    * the prep+transform chain. */
+  private[graft] val clusteredParts = Artifact("clusteredParts") { (s, d) =>
+    ml.Recommend.clusterItems(Tables.part(s, d),
+      "p_partkey", "p_brand", Seq("p_retailprice", "p_size"))
+      .localCheckpoint(true)
+  }
+
+  /** One IVF index shared by q32 (recall-probe) and q61 (exact-probe): the
+    * KMeans cell fit runs once per sweep. The index pins its
+    * feature-projection cache while live; releasing it unpersists that. */
+  private[graft] val ivfIdx =
+    Artifact.withRelease[Similarity.IvfIndex]("ivfIdx", _.release()) { (s, d) =>
       Similarity.ivfIndex(Tables.embeddings(s, d), "vec_id", "embedding",
-        nLists = 16))
+        nLists = 16)
+    }
 
-  /** PQ index for q70, memoized per (session, dir) with the same release
-    * contract as the IVF index. */
-  private[graft] val pqCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Similarity.PqIndex]
-  private[graft] def pqIdx(s: SparkSession, d: String): Similarity.PqIndex =
-    pqCache.getOrElseUpdate((s, d),
+  /** PQ index for q70, with the same release contract as the IVF index. */
+  private[graft] val pqIdx =
+    Artifact.withRelease[Similarity.PqIndex]("pqIdx", _.release()) { (s, d) =>
       Similarity.pqIndex(Tables.embeddings(s, d), "vec_id", "embedding",
-        dim = 64))
+        dim = 64)
+    }
 
-  /** Composed IVF-PQ index for q327, memoized like its two parents. */
-  private[graft] val ivfPqCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Similarity.IvfPqIndex]
-  private[graft] def ivfPqIdx(s: SparkSession, d: String): Similarity.IvfPqIndex =
-    ivfPqCache.getOrElseUpdate((s, d),
+  /** Composed IVF-PQ index for q327, released like its two parents. */
+  private[graft] val ivfPqIdx =
+    Artifact.withRelease[Similarity.IvfPqIndex]("ivfPqIdx", _.release()) { (s, d) =>
       Similarity.ivfPqIndex(Tables.embeddings(s, d), "vec_id", "embedding",
-        dim = 64, nLists = 16, m = 8, k = 32))
+        dim = 64, nLists = 16, m = 8, k = 32)
+    }
 
-  /** RF fit shared by q27/q28, memoized per (session, scale dir). Trained
-    * on a deterministic 5% key-sampled slice so CV tuning stays bounded. */
-  private[graft] val rfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ml.Popularity.Fit]
-  private[graft] def rfFit(s: SparkSession, d: String): ml.Popularity.Fit =
-    rfCache.getOrElseUpdate((s, d), {
-      val sample = Tables.lineitem(s, d)
-        .filter(pmod(col("l_orderkey"), lit(40)) === 0)
-        .select("l_quantity", "l_discount", "l_tax", "l_extendedprice")
-      ml.Popularity.train(sample,
-        Seq("l_quantity", "l_discount", "l_tax"), "l_extendedprice")
-    })
+  /** RF fit shared by q27/q28/q62. Trained on a deterministic 5%
+    * key-sampled slice so CV tuning stays bounded. */
+  private[graft] val rfFit = Artifact("rfFit") { (s, d) =>
+    val sample = Tables.lineitem(s, d)
+      .filter(pmod(col("l_orderkey"), lit(40)) === 0)
+      .select("l_quantity", "l_discount", "l_tax", "l_extendedprice")
+    ml.Popularity.train(sample,
+      Seq("l_quantity", "l_discount", "l_tax"), "l_extendedprice")
+  }
 
   /** The q25 random-projection oracle, generated: the hyperplane weights
     * sin(i·(j+1)) are plain doubles computed once here and embedded as

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
 
 /** Parquet table loaders for the graft test schema.
   *
@@ -14,12 +15,13 @@ object Tables {
     * (spark_optimization_guide §2.5, "input skew: one huge unsplittable
     * file"): a parquet file is only splittable at row-group boundaries, so
     * a table that arrives as one file/one row group plans every downstream
-    * map stage at ONE task no matter how many cores the session has. When
-    * the frame's partition count is below the session parallelism,
-    * hash-spread the rows across the cores (hash repartition, not
-    * round-robin: deterministic row→partition mapping, no
-    * sort-before-repartition pass). At real scale the split count exceeds
-    * the core count and this is an identity — no exchange is added.
+    * map stage at ONE task no matter how many cores the session has. Unless
+    * the frame is a scan/filter/project chain whose scan already has at
+    * least as many splits as the session parallelism, hash-spread the rows
+    * across the cores (hash repartition, not round-robin: deterministic
+    * row→partition mapping, no sort-before-repartition pass). At real scale
+    * the split count exceeds the core count and a spread scan is an
+    * identity — no exchange is added.
     *
     * Deliberately NOT applied to every load: for scan→partial-agg plans
     * the extra full-row exchange costs more than the map work it
@@ -52,14 +54,21 @@ object Tables {
                               keys: Seq[org.apache.spark.sql.Column]): DataFrame = {
     if (sys.props.get("graft.scan.spread").contains("off")) return df
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    // Partition-count probe WITHOUT df.rdd: under AQE, .rdd finalizes the
-    // adaptive plan, which EXECUTES every upstream shuffle stage eagerly
-    // and throws that work away when the frame is re-planned downstream.
-    // sparkPlan.execute() builds the non-adaptive physical RDD lazily —
-    // partition arithmetic only, no job (current call sites are exchange-
-    // free scan/project plans, where this is pure planning either way).
-    if (df.queryExecution.sparkPlan.execute().getNumPartitions >= cores) df
+    if (scanPartitions(df.queryExecution.sparkPlan).exists(_ >= cores)) df
     else df.repartition(cores, keys: _*)
+  }
+
+  /** The partition count of a plain scan/filter/project chain, read from its
+    * file-scan leaf by planning alone: `inputRDD` only lays out the file
+    * splits, it runs no job. Any other plan shape gets None, because its
+    * count is known only once the plan is prepared or run — `execute()` on
+    * an unprepared plan throws (a broadcast join's build side has no
+    * broadcast yet), and `.rdd` under AQE runs every upstream stage. */
+  private def scanPartitions(plan: SparkPlan): Option[Int] = plan match {
+    case p: ProjectExec => scanPartitions(p.child)
+    case f: FilterExec => scanPartitions(f.child)
+    case scan: FileSourceScanExec => Some(scan.inputRDD.getNumPartitions)
+    case _ => None
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
